@@ -108,15 +108,20 @@ def compile_template(template_text: str, columns: list[str] | set[str]) -> Colum
 
 
 def render_documents(schools: DataFrame, template_text: str) -> DataFrame:
-    """Stage-1 parity: wide schools frame -> (school_code, content).
+    """Stage-1 parity: wide schools frame (as ``read_schools_csv``
+    returns it) -> (school_code, content), one row per school code.
 
     Key filter P2 (rows with missing SchoolCode are skipped,
     program1:376-379); the filename key is the *sanitized* (not
-    number-formatted) SchoolCode (program1:377,382).
+    number-formatted) SchoolCode (program1:377,382). A code that
+    repeats keeps its LAST row in file order (``__row_idx``): the
+    reference writes ``{code}.md`` once per row (S5, program1:382-389),
+    so a later row overwrites an earlier one. Stage 3's display name
+    stays keep-first (A3) — that is the reference's rule there.
 
-    Scale posture: narrow map-only plan — scan, filter, concat, no
-    shuffle; at 100 TB this is embarrassingly parallel and the CSV/
-    parquet scan prunes to exactly the referenced columns.
+    Scale posture: the template renders in a narrow map-only
+    projection; the one shuffle carries only (code, content, row
+    index) to pick each code's last row.
     """
     code = sanitize(F.col("SchoolCode"))
     return (
@@ -124,5 +129,8 @@ def render_documents(schools: DataFrame, template_text: str) -> DataFrame:
         .select(
             code.alias("school_code"),
             compile_template(template_text, schools.columns).alias("content"),
+            "__row_idx",
         )
+        .groupBy("school_code")
+        .agg(F.max_by("content", "__row_idx").alias("content"))
     )

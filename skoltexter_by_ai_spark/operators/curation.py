@@ -463,8 +463,7 @@ def robust_zscore(
     the generic two-round bisection below; results are identical
     either way (equality property-tested, sabotage-tested).
     """
-    from pyspark import StorageLevel
-
+    from skoltexter_by_ai_spark.operators.pinning import pin, scoped_pin
     from skoltexter_by_ai_spark.operators.quantiles import grouped_exact_quantiles
 
     if 10**round_to % (2 * scale) != 0:
@@ -478,160 +477,158 @@ def robust_zscore(
     # (joined with the pinned per-group median) instead of re-scanning
     # and re-joining the raw table — one source scan total for the
     # whole two-round selection machinery (VERDICT r4 item 4).
-    narrow = df.select(
-        F.col(group_col),
-        v_long.alias("__vc"),
-        (F.abs(v * scale - v_long) < 0.01).alias("__ok"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # Build-scoped: both exits below return plans that read only pinned
+    # per-group tables, and an off-grid guard failure mid-action must
+    # not leave the projection in the CacheManager.
+    with scoped_pin(
+        df.select(
+            F.col(group_col),
+            v_long.alias("__vc"),
+            (F.abs(v * scale - v_long) < 0.01).alias("__ok"),
+        )
+    ) as narrow:
+        if fused:
+            from skoltexter_by_ai_spark.operators.quantiles import grouped_median_mad
 
-    if fused:
-        from skoltexter_by_ai_spark.operators.quantiles import grouped_median_mad
+            res = grouped_median_mad(
+                narrow,
+                group_col,
+                F.col("__vc"),
+                guard=F.col("__ok"),
+                reliable_checkpoint=reliable_checkpoint,
+            )
+            if res is not None:
+                gs, ok = res
+                if ok:
+                    gstats = gs.select(
+                        group_col,
+                        F.round(F.col("__m2") / (2 * scale), round_to).alias("grp_median"),
+                        F.round(
+                            ((F.col("__d1") + F.col("__d2")) / F.lit(2.0)) / (2 * scale),
+                            round_to,
+                        ).alias("grp_mad"),
+                    )
+                    return df.join(F.broadcast(gstats), group_col, "left").withColumn(
+                        "robust_z",
+                        # try_divide: a zero-MAD group (constant values)
+                        # yields NULL robust_z — DuckDB's x/0.0 semantics
+                        # and the documented contract (ADVICE r3/r4); a
+                        # plain `/` is an ANSI DIVIDE_BY_ZERO error.
+                        F.round(
+                            F.try_divide(v - F.col("grp_median"), F.col("grp_mad")),
+                            round_to,
+                        )
+                        + F.lit(0.0),
+                    )
+            # Sketch miss or over-budget windows: fall through to the
+            # generic two-round bisection (identical results, more passes).
 
-        res = grouped_median_mad(
+        # Only the MEDIAN rank is closed exactly (2 ranks instead of 6):
+        # the quartiles were only ever SEEDS for the MAD round's bracket,
+        # so Greenwald-Khanna surrogates from the same stats-pass sketch
+        # are enough — conservative inner/outer quartile estimates at
+        # ± 3/accuracy rank error, for free (shared sketch state), with
+        # 3x less histogram row amplification in the median pass. A seed
+        # miss still only costs an overflow-bucket pass, never correctness.
+        _acc = 1_000
+        _d3 = 3.0 / _acc
+        medq, vstats = grouped_exact_quantiles(
             narrow,
-            group_col,
+            [group_col],
             F.col("__vc"),
+            [0.5],
             guard=F.col("__ok"),
+            return_stats=True,
+            seed_accuracy=_acc,
+            reliable_checkpoint=reliable_checkpoint,
+            # __gk tail layout (after the 2 median brackets):
+            # [q1_in, q3_in, q1_out, q3_out] — inner estimates err toward
+            # the median (rank +/-3d3 margin), outer away from it.
+            extra_sketch_probs=[0.25 + _d3, 0.75 - _d3, 0.25 - _d3, 0.75 + _d3],
+        )
+        # One row per group: the exact median in the LONG's units (cents).
+        # Pinned eagerly: the interpolation-join chain behind medq spawns
+        # several broadcast jobs per EVALUATION, and med/dstats/the final
+        # output would each re-run it — one tiny checkpoint collapses
+        # ~10 scheduling round-trips into 1 (group-count rows only).
+        qstats = pin(
+            medq.groupBy(group_col).agg(
+                F.max(F.when(F.col("__p") == 0.5, F.col("__q"))).alias("__medc")
+            ),
+            reliable=reliable_checkpoint,
+        )
+        med = qstats.select(
+            group_col, F.round(F.col("__medc") / scale, round_to).alias("grp_median")
+        )
+
+        # The p=0.5 interpolation fraction is 0 or 0.5, so the median sits
+        # on the HALF-grid of the value scale — deltas |v − med| are exact
+        # integers at 2×scale (guarded below), keeping the bisection range
+        # ~scale-sized instead of 10^round_to-sized.
+        m2 = F.round(F.col("grp_median") * (2 * scale)).cast("long")
+        # The MAD round reuses the median round's per-group stats: same
+        # non-NULL count, and [0, max one-sided spread] is a superset of
+        # the delta range — so no second counting scan is needed. Folding
+        # the half-grid assert into __max keeps it from being pruned.
+        # The quartile surrogates bracket the MAD: [m−r, m+r] with
+        # r = min(m−q1, q3−m) sits inside [q1, q3] (≲ half the mass, so
+        # MAD ≥ r), and with r = max(m−q1, q3−m) it covers [q1, q3]
+        # (≳ half the mass, so MAD ≤ r). The INNER estimates (q1_in/q3_in,
+        # biased toward the median) keep `near` a valid lower bracket and
+        # the OUTER ones keep `far` a valid upper bracket even at the
+        # sketch's worst rank error; ±2 half-grid units absorb
+        # interpolation wobble; a miss (duplicate-heavy boundaries) only
+        # costs an overflow-bucket pass, never correctness.
+        on_half_grid = F.abs(F.col("grp_median") * (2 * scale) - m2) < 0.01
+        q1_in = F.col("__gk")[2].cast("double")
+        q3_in = F.col("__gk")[3].cast("double")
+        q1_out = F.col("__gk")[4].cast("double")
+        q3_out = F.col("__gk")[5].cast("double")
+        near = F.least(F.col("__medc") - q1_in, q3_in - F.col("__medc"))
+        far = F.greatest(F.col("__medc") - q1_out, q3_out - F.col("__medc"))
+        dstats = vstats.join(
+            F.broadcast(
+                qstats.withColumn("grp_median", F.round(F.col("__medc") / scale, round_to))
+            ),
+            group_col,
+        ).select(
+            group_col,
+            "__n",
+            F.lit(0).cast("long").alias("__min"),
+            (
+                F.greatest(F.col("__max") * 2 - m2, m2 - F.col("__min") * 2)
+                + F.coalesce(
+                    F.assert_true(
+                        on_half_grid, "robust_zscore: median is off the half-grid"
+                    ).cast("long"),
+                    F.lit(0),
+                )
+            ).alias("__max"),
+            F.greatest(F.lit(0).cast("long"), F.floor(near * 2).cast("long") - 2).alias("__slo"),
+            (F.ceil(far * 2).cast("long") + 2).alias("__shi"),
+        )
+        # The MAD round's histogram reads the CACHED narrow cents + a
+        # broadcast median join — no second source scan, no wide re-join.
+        madq = grouped_exact_quantiles(
+            narrow.join(F.broadcast(med), group_col, "left"),
+            [group_col],
+            F.abs(F.col("__vc") * 2 - m2),
+            [0.5],
+            stats=dstats,
             reliable_checkpoint=reliable_checkpoint,
         )
-        if res is not None:
-            gs, ok = res
-            if ok:
-                gstats = gs.select(
-                    group_col,
-                    F.round(F.col("__m2") / (2 * scale), round_to).alias("grp_median"),
-                    F.round(
-                        ((F.col("__d1") + F.col("__d2")) / F.lit(2.0)) / (2 * scale),
-                        round_to,
-                    ).alias("grp_mad"),
-                )
-                narrow.unpersist()
-                return df.join(F.broadcast(gstats), group_col, "left").withColumn(
-                    "robust_z",
-                    # try_divide: a zero-MAD group (constant values)
-                    # yields NULL robust_z — DuckDB's x/0.0 semantics
-                    # and the documented contract (ADVICE r3/r4); a
-                    # plain `/` is an ANSI DIVIDE_BY_ZERO error.
-                    F.round(
-                        F.try_divide(v - F.col("grp_median"), F.col("grp_mad")),
-                        round_to,
-                    )
-                    + F.lit(0.0),
-                )
-        # Sketch miss or over-budget windows: fall through to the
-        # generic two-round bisection (identical results, more passes).
-
-    # Only the MEDIAN rank is closed exactly (2 ranks instead of 6):
-    # the quartiles were only ever SEEDS for the MAD round's bracket,
-    # so Greenwald-Khanna surrogates from the same stats-pass sketch
-    # are enough — conservative inner/outer quartile estimates at
-    # ± 3/accuracy rank error, for free (shared sketch state), with
-    # 3x less histogram row amplification in the median pass. A seed
-    # miss still only costs an overflow-bucket pass, never correctness.
-    _acc = 1_000
-    _d3 = 3.0 / _acc
-    medq, vstats = grouped_exact_quantiles(
-        narrow,
-        [group_col],
-        F.col("__vc"),
-        [0.5],
-        guard=F.col("__ok"),
-        return_stats=True,
-        seed_accuracy=_acc,
-        reliable_checkpoint=reliable_checkpoint,
-        # __gk tail layout (after the 2 median brackets):
-        # [q1_in, q3_in, q1_out, q3_out] — inner estimates err toward
-        # the median (rank +/-3d3 margin), outer away from it.
-        extra_sketch_probs=[0.25 + _d3, 0.75 - _d3, 0.25 - _d3, 0.75 + _d3],
-    )
-    # One row per group: the exact median in the LONG's units (cents).
-    # Pinned eagerly: the interpolation-join chain behind medq spawns
-    # several broadcast jobs per EVALUATION, and med/dstats/the final
-    # output would each re-run it — one tiny checkpoint collapses
-    # ~10 scheduling round-trips into 1 (group-count rows only).
-    from skoltexter_by_ai_spark.operators.pinning import pin
-
-    qstats = pin(
-        medq.groupBy(group_col).agg(
-            F.max(F.when(F.col("__p") == 0.5, F.col("__q"))).alias("__medc")
-        ),
-        reliable=reliable_checkpoint,
-    )
-    med = qstats.select(
-        group_col, F.round(F.col("__medc") / scale, round_to).alias("grp_median")
-    )
-
-    # The p=0.5 interpolation fraction is 0 or 0.5, so the median sits
-    # on the HALF-grid of the value scale — deltas |v − med| are exact
-    # integers at 2×scale (guarded below), keeping the bisection range
-    # ~scale-sized instead of 10^round_to-sized.
-    m2 = F.round(F.col("grp_median") * (2 * scale)).cast("long")
-    # The MAD round reuses the median round's per-group stats: same
-    # non-NULL count, and [0, max one-sided spread] is a superset of
-    # the delta range — so no second counting scan is needed. Folding
-    # the half-grid assert into __max keeps it from being pruned.
-    # The quartile surrogates bracket the MAD: [m−r, m+r] with
-    # r = min(m−q1, q3−m) sits inside [q1, q3] (≲ half the mass, so
-    # MAD ≥ r), and with r = max(m−q1, q3−m) it covers [q1, q3]
-    # (≳ half the mass, so MAD ≤ r). The INNER estimates (q1_in/q3_in,
-    # biased toward the median) keep `near` a valid lower bracket and
-    # the OUTER ones keep `far` a valid upper bracket even at the
-    # sketch's worst rank error; ±2 half-grid units absorb
-    # interpolation wobble; a miss (duplicate-heavy boundaries) only
-    # costs an overflow-bucket pass, never correctness.
-    on_half_grid = F.abs(F.col("grp_median") * (2 * scale) - m2) < 0.01
-    q1_in = F.col("__gk")[2].cast("double")
-    q3_in = F.col("__gk")[3].cast("double")
-    q1_out = F.col("__gk")[4].cast("double")
-    q3_out = F.col("__gk")[5].cast("double")
-    near = F.least(F.col("__medc") - q1_in, q3_in - F.col("__medc"))
-    far = F.greatest(F.col("__medc") - q1_out, q3_out - F.col("__medc"))
-    dstats = vstats.join(
-        F.broadcast(
-            qstats.withColumn("grp_median", F.round(F.col("__medc") / scale, round_to))
-        ),
-        group_col,
-    ).select(
-        group_col,
-        "__n",
-        F.lit(0).cast("long").alias("__min"),
-        (
-            F.greatest(F.col("__max") * 2 - m2, m2 - F.col("__min") * 2)
-            + F.coalesce(
-                F.assert_true(
-                    on_half_grid, "robust_zscore: median is off the half-grid"
-                ).cast("long"),
-                F.lit(0),
-            )
-        ).alias("__max"),
-        F.greatest(F.lit(0).cast("long"), F.floor(near * 2).cast("long") - 2).alias("__slo"),
-        (F.ceil(far * 2).cast("long") + 2).alias("__shi"),
-    )
-    # The MAD round's histogram reads the CACHED narrow cents + a
-    # broadcast median join — no second source scan, no wide re-join.
-    madq = grouped_exact_quantiles(
-        narrow.join(F.broadcast(med), group_col, "left"),
-        [group_col],
-        F.abs(F.col("__vc") * 2 - m2),
-        [0.5],
-        stats=dstats,
-        reliable_checkpoint=reliable_checkpoint,
-    )
-    mad = madq.select(
-        group_col,
-        F.round(F.col("__q") / (2 * scale), round_to).alias("grp_mad"),
-    )
-    # ONE pinned broadcast of the fused (median, MAD) per-group table
-    # onto the output scan — without the checkpoint the final plan
-    # re-evaluates BOTH rounds' interpolation chains (~16 jobs for a
-    # group-count-sized frame). LEFT: a group whose values are all
-    # NULL never reaches the bisection (non-NULL filter), so it has no
-    # stats row — keep its rows with NULL median/MAD/z, the same shape
-    # the percentile composition this replaced produced (ADVICE r3).
-    gstats = pin(med.join(mad, group_col, "left"), reliable=reliable_checkpoint)
-    # Both rounds' passes have run (the machinery is eager) and gstats
-    # is pinned, so the cached narrow projection can go now.
-    narrow.unpersist()
+        mad = madq.select(
+            group_col,
+            F.round(F.col("__q") / (2 * scale), round_to).alias("grp_mad"),
+        )
+        # ONE pinned broadcast of the fused (median, MAD) per-group table
+        # onto the output scan — without the checkpoint the final plan
+        # re-evaluates BOTH rounds' interpolation chains (~16 jobs for a
+        # group-count-sized frame). LEFT: a group whose values are all
+        # NULL never reaches the bisection (non-NULL filter), so it has no
+        # stats row — keep its rows with NULL median/MAD/z, the same shape
+        # the percentile composition this replaced produced (ADVICE r3).
+        gstats = pin(med.join(mad, group_col, "left"), reliable=reliable_checkpoint)
     return df.join(F.broadcast(gstats), group_col, "left").withColumn(
         "robust_z",
         # try_divide: zero-MAD groups yield NULL robust_z (DuckDB's

@@ -1,47 +1,60 @@
-"""Shared intermediate-pinning helper: one switch between the fast
-executor-local checkpoint and the fault-tolerant reliable checkpoint.
+"""The one place that knows how an intermediate is materialized and
+released.
 
-Every iterative / multi-consumer operator in this package pins small
-bounded intermediates (per-group stats frames, pruned shingle lists,
-label tables between connected-component rounds) so downstream
-consumers read one materialization instead of re-running the upstream
-pipeline. The default pin is ``localCheckpoint``: blocks live on
-executors with TRUNCATED lineage — the fastest option, but on a real
-cluster losing an executor mid-query makes the block unrecoverable
-and fails the query. That is an acceptable trade for a rerunnable
-single-query batch (the operators are deterministic; rerunning is
-safe), but a multi-hour 1000-executor 100 TB job where executor loss
-is ROUTINE needs the fault-tolerant form: ``persist() +
-checkpoint()`` into ``sparkContext.setCheckpointDir``'s HDFS/object-
-store location, where a lost block is re-read from reliable storage
-instead of failing the job (VERDICT r10 item 2 — previously only the
-SimHash path offered this).
+Operators that read an intermediate more than once (per-group stats
+frames, pruned shingle lists, label tables between connected-component
+rounds, a pair table collected twice) materialize it once so every
+consumer reads the same blocks instead of re-running the upstream
+pipeline. There are exactly two shapes:
 
-The ``persist`` before a reliable checkpoint matters (ADVICE r6): the
-checkpoint write happens in a SECOND pass after the computing action,
-and without a cached copy Spark recomputes the whole upstream
-pipeline just to write the files; with it, the write streams from
-cached blocks.
+- **plan-referenced** — :func:`pin`. The returned DataFrame (or a plan
+  built on it) reads the materialization, so it must outlive the
+  builder. Default: ``localCheckpoint`` — executor-local blocks,
+  truncated lineage; Spark's ContextCleaner frees them once the plan
+  is garbage-collected. Nothing enters the CacheManager, so nothing
+  can be served to a later identical plan.
+- **build-scoped** — :func:`scoped_pin`. Only the builder's own jobs
+  read the materialization (bisection passes, connected-component
+  rounds, driver-side collects), and the returned plan never
+  references it. Default: ``persist(MEMORY_AND_DISK)``, released on
+  leaving the ``with`` block, also when it is left by an exception.
+  persist defers to the first action (a localCheckpoint — even a lazy
+  one — executes its whole upstream synchronously under AQE) and
+  keeps the plan's output partitioning (a localCheckpoint degrades it
+  to UnknownPartitioning).
 
-Block lifecycle (both modes): pinned blocks stay referenced by the
-returned DataFrame's plan; once the caller drops the result, Spark's
-ContextCleaner reclaims them on GC. Reliable checkpoint FILES are
-additionally cleaned when ``spark.cleaner.referenceTracking.
-cleanCheckpoints`` is set; otherwise they live until the checkpoint
-dir is cleaned externally (the standard Spark contract).
+``reliable=True`` is the fault-tolerance escape hatch both helpers
+share: a local checkpoint is unrecoverable when an executor is lost,
+which is an acceptable trade for a rerunnable single-query batch (the
+operators are deterministic) but not for a multi-hour job on a large
+cluster where executor loss is routine. There the intermediate goes to
+``persist() + checkpoint()`` under ``sparkContext.setCheckpointDir``,
+and a lost block is re-read from reliable storage. The ``persist``
+before the checkpoint matters: the checkpoint write runs as a second
+job after the computing action, and without a cached copy Spark would
+recompute the whole upstream pipeline just to write the files.
+:func:`scoped_pin` releases that cached copy on exit; a plan-referenced
+reliable :func:`pin` keeps it (its CacheManager entry lives as long as
+the session or an explicit ``unpersist``). Reliable checkpoint FILES
+are cleaned when ``spark.cleaner.referenceTracking.cleanCheckpoints``
+is set, otherwise when the checkpoint dir is cleaned externally.
 
-Operators expose this as a ``reliable_checkpoint: bool = False``
-parameter and thread it here — keeping the default the fast local pin
-and the escape hatch uniform across the package.
+Operators expose the switch as a ``reliable_checkpoint: bool = False``
+parameter and thread it here.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 def pin(df: DataFrame, reliable: bool = False, eager: bool = True) -> DataFrame:
-    """Materialize-and-truncate ``df`` for multi-consumer reads.
+    """Plan-referenced materialization of ``df`` for multi-consumer
+    reads.
 
     ``reliable=False`` (default): ``localCheckpoint(eager)`` —
     executor-local blocks, truncated lineage, fastest; unrecoverable
@@ -67,6 +80,30 @@ def pin(df: DataFrame, reliable: bool = False, eager: bool = True) -> DataFrame:
             "by every executor>') first. On a single machine a local path "
             "works; on a cluster it must be shared storage."
         )
-    from pyspark.storagelevel import StorageLevel
-
     return df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(eager=eager)
+
+
+@contextmanager
+def scoped_pin(df: DataFrame, reliable: bool = False) -> Iterator[DataFrame]:
+    """Build-scoped materialization of ``df``: yields the materialized
+    frame and releases its CacheManager entry on exit, including an
+    exit by exception.
+
+    ``reliable=False`` (default): ``persist(MEMORY_AND_DISK)``, lazy —
+    the first action inside the block fills the cache.
+
+    ``reliable=True``: ``pin(df, reliable=True, eager=False)``; the
+    persist beneath the checkpoint is released on exit.
+
+    A plan that outlives the block and still reads the yielded frame
+    recomputes it from its lineage: derive such a result from a
+    :func:`pin` that an action inside the block has materialized.
+    """
+    if reliable:
+        out = pin(df, reliable=True, eager=False)
+    else:
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield out
+    finally:
+        df.unpersist()

@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from skoltexter_by_ai_spark.operators.pinning import pin
+from skoltexter_by_ai_spark.operators.pinning import pin, scoped_pin
 
 # Diagnostic: histogram passes used by the most recent
 # grouped_exact_quantiles calls (appended per call, capped to the last
@@ -94,7 +94,6 @@ def grouped_exact_quantiles(
     guard: Column | None = None,
     stats: DataFrame | None = None,
     return_stats: bool = False,
-    persist_base: bool = False,
     guard_msg: str | None = None,
     seed_accuracy: int | None = 1_000,
     ranks: list[int] | None = None,
@@ -169,7 +168,6 @@ def grouped_exact_quantiles(
             guard=guard,
             stats=stats.withColumn("__all", F.lit(1)) if stats is not None else None,
             return_stats=return_stats,
-            persist_base=persist_base,
             guard_msg=guard_msg,
             seed_accuracy=seed_accuracy,
             ranks=ranks,
@@ -198,18 +196,13 @@ def grouped_exact_quantiles(
 
     # The narrow (group, value) projection is read once per refinement
     # pass. Re-scanning a pruned columnar source per pass is cheap and
-    # stateless — the scale-safe default. ``persist_base=True`` caches
-    # it (disk-backed) instead, worthwhile when ``df`` is an expensive
-    # upstream computation rather than a raw scan.
+    # stateless; a caller whose ``df`` is an expensive upstream
+    # computation hands in a scoped_pin of it (robust_zscore does).
     base = df.select(
         *group_cols,
         value_long.alias("__v"),
         (guard if guard is not None else F.lit(True)).alias("__ok"),
     ).filter(F.col("__v").isNotNull())
-    if persist_base:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
 
     # Seed brackets: the SAME stats pass also runs a Greenwald-Khanna
     # sketch at each prob ± 3/accuracy. GK state is O(accuracy·log n)
@@ -504,10 +497,6 @@ def grouped_exact_quantiles(
 
     LAST_PASS_COUNTS.append(n_passes)
     del LAST_PASS_COUNTS[:-_PASS_COUNT_KEEP]
-    # Everything downstream reads only the checkpointed small frames,
-    # so the cached projection can go immediately.
-    if persist_base:
-        base.unpersist()
 
     vals = closed.select(*group_cols, "__k", F.col("__lo").alias("__vk"))
 
@@ -560,7 +549,6 @@ def exact_quantile_bounds(
     probs: list[float],
     scale: int = 100,
     round_to: int = 6,
-    persist_base: bool = False,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Quantiles of a fixed-decimal DOUBLE column, one output column
@@ -570,8 +558,7 @@ def exact_quantile_bounds(
     ``value_col`` must sit on the ``1/scale`` grid (prices → cents at
     the default 100); the mapping is guarded, not assumed. Results are
     rounded to ``round_to`` places — the suite's cross-engine
-    convention for interpolated quantiles. The projection is cached
-    between refinement passes by default (disk-backed, bounded).
+    convention for interpolated quantiles.
     """
     v = F.col(value_col).cast("double")
     scaled = F.round(v * scale).cast("long")
@@ -581,7 +568,6 @@ def exact_quantile_bounds(
         scaled,
         probs,
         guard=F.abs(v * scale - scaled) < 0.01,
-        persist_base=persist_base,
         reliable_checkpoint=reliable_checkpoint,
         guard_msg=(
             f"exact_quantile_bounds: {value_col!r} has values off the "
@@ -682,87 +668,73 @@ def grouped_median_mad(
         ).cast("long"),
         F.lit(0),
     )
-    # persist, not localCheckpoint: under AQE a localCheckpoint —
-    # even a lazy one — synchronously EXECUTES every upstream stage to
-    # produce the final RDD (measured ~1 s on the x72 stats pass), an
-    # extra barrier on top of the probe action below. persist defers
-    # entirely: the probe materializes the stats pass into the cache
-    # and the windows broadcast reads it back. The entry is released
-    # before return (both exits), so nothing leaks into the
-    # CacheManager across bench runs (no cross-run result reuse). The
-    # reliable mode keeps the checkpoint pin — there the file write is
-    # the point.
-    stats = stats.select(g, "__n", guarded_min.alias("__min"), "__max", "__gk")
-    if reliable_checkpoint:
-        stats = pin(stats, reliable=True, eager=False)
-        stats_cached = None
-    else:
-        from pyspark.storagelevel import StorageLevel
-
-        stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
-        stats_cached = stats
-
-    s = f"{int(slack)}L"
-    # Window geometry, all LONG arithmetic (`div` truncation direction
-    # is absorbed by the ± slack; window edges are never load-bearing —
-    # a pick outside its window is DETECTED and falls back):
-    # - W0 (median window): the GK median bracket ± slack;
-    # - delta band [dlo, dhi]: conservative over every median position
-    #   inside the bracket, from inner/outer quartile surrogates;
-    # - W1/W2 (quartile windows): the v-preimages of the delta band,
-    #   unioned over the median bracket, merged into one window when
-    #   they touch (tiny-IQR groups) so in-range buckets stay disjoint
-    #   and no value is double-counted. An empty W2 is [max+1, max].
-    #
-    # Each level is ONE selectExpr parsed JVM-side: the former
-    # withColumns chain built ~30 Column trees through py4j, a
-    # measurable slice of the per-call driver time at bench scale
-    # (same single-parse rationale as the r11 SimHash rewrite);
-    # operator-identical expressions, levels kept separate so every
-    # column is still defined exactly once.
-    spec = (
-        stats.selectExpr(
-            "*",
-            "cast(__gk[0] as bigint) as __mlo",
-            "cast(__gk[1] as bigint) as __mhi",
-            "cast(__gk[2] as bigint) as __q1i",
-            "cast(__gk[3] as bigint) as __q3i",
-            "cast(__gk[4] as bigint) as __q1o",
-            "cast(__gk[5] as bigint) as __q3o",
+    # Build-scoped: the probe action below materializes the stats pass
+    # into the cache and the windows broadcast reads it back; nothing
+    # outlives the call (both exits, and a guard failure mid-action).
+    with scoped_pin(
+        stats.select(g, "__n", guarded_min.alias("__min"), "__max", "__gk"),
+        reliable=reliable_checkpoint,
+    ) as stats:
+        s = f"{int(slack)}L"
+        # Window geometry, all LONG arithmetic (`div` truncation direction
+        # is absorbed by the ± slack; window edges are never load-bearing —
+        # a pick outside its window is DETECTED and falls back):
+        # - W0 (median window): the GK median bracket ± slack;
+        # - delta band [dlo, dhi]: conservative over every median position
+        #   inside the bracket, from inner/outer quartile surrogates;
+        # - W1/W2 (quartile windows): the v-preimages of the delta band,
+        #   unioned over the median bracket, merged into one window when
+        #   they touch (tiny-IQR groups) so in-range buckets stay disjoint
+        #   and no value is double-counted. An empty W2 is [max+1, max].
+        #
+        # Each level is ONE selectExpr parsed JVM-side: the former
+        # withColumns chain built ~30 Column trees through py4j, a
+        # measurable slice of the per-call driver time at bench scale
+        # (same single-parse rationale as the r11 SimHash rewrite);
+        # operator-identical expressions, levels kept separate so every
+        # column is still defined exactly once.
+        spec = (
+            stats.selectExpr(
+                "*",
+                "cast(__gk[0] as bigint) as __mlo",
+                "cast(__gk[1] as bigint) as __mhi",
+                "cast(__gk[2] as bigint) as __q1i",
+                "cast(__gk[3] as bigint) as __q3i",
+                "cast(__gk[4] as bigint) as __q1o",
+                "cast(__gk[5] as bigint) as __q3o",
+            )
+            .selectExpr(
+                "*",
+                "greatest(cast(0 as bigint), 2 * least(__mlo - __q1i, __q3i - __mhi)"
+                f" - {s}) as __dlo",
+                f"2 * greatest(__mhi - __q1o, __q3o - __mlo) + {s} as __dhi",
+            )
+            .selectExpr(
+                "*",
+                f"greatest(__mlo - {s}, __min) as __w0l",
+                f"least(__mhi + {s}, __max) as __w0h",
+                f"greatest((2*__mlo - __dhi) div 2 - {s}, __min) as __ral",
+                f"least((2*__mhi - __dlo) div 2 + {s}, __max) as __rah",
+                f"greatest((2*__mlo + __dlo) div 2 - {s}, __min) as __rbl",
+                f"least((2*__mhi + __dhi) div 2 + {s}, __max) as __rbh",
+            )
+            .selectExpr("*", "(__rah >= __rbl - 1) as __merge")
+            .selectExpr(
+                "*",
+                "__ral as __w1l",
+                "if(__merge, __rbh, __rah) as __w1h",
+                "if(__merge, __max + 1, __rbl) as __w2l",
+                "if(__merge, __max, __rbh) as __w2h",
+            )
+            .selectExpr(
+                "*",
+                "(__n - 1) div 2 as __k1",
+                "__n div 2 as __k2",
+                "greatest(cast(0 as bigint), __w0h - __w0l + 1)"
+                " + greatest(cast(0 as bigint), __w1h - __w1l + 1)"
+                " + greatest(cast(0 as bigint), __w2h - __w2l + 1) as __width",
+            )
         )
-        .selectExpr(
-            "*",
-            "greatest(cast(0 as bigint), 2 * least(__mlo - __q1i, __q3i - __mhi)"
-            f" - {s}) as __dlo",
-            f"2 * greatest(__mhi - __q1o, __q3o - __mlo) + {s} as __dhi",
-        )
-        .selectExpr(
-            "*",
-            f"greatest(__mlo - {s}, __min) as __w0l",
-            f"least(__mhi + {s}, __max) as __w0h",
-            f"greatest((2*__mlo - __dhi) div 2 - {s}, __min) as __ral",
-            f"least((2*__mhi - __dlo) div 2 + {s}, __max) as __rah",
-            f"greatest((2*__mlo + __dlo) div 2 - {s}, __min) as __rbl",
-            f"least((2*__mhi + __dhi) div 2 + {s}, __max) as __rbh",
-        )
-        .selectExpr("*", "(__rah >= __rbl - 1) as __merge")
-        .selectExpr(
-            "*",
-            "__ral as __w1l",
-            "if(__merge, __rbh, __rah) as __w1h",
-            "if(__merge, __max + 1, __rbl) as __w2l",
-            "if(__merge, __max, __rbh) as __w2h",
-        )
-        .selectExpr(
-            "*",
-            "(__n - 1) div 2 as __k1",
-            "__n div 2 as __k2",
-            "greatest(cast(0 as bigint), __w0h - __w0l + 1)"
-            " + greatest(cast(0 as bigint), __w1h - __w1l + 1)"
-            " + greatest(cast(0 as bigint), __w2h - __w2l + 1) as __width",
-        )
-    )
-    try:
         # One probe job serves both driver scalars: the window-width
         # budget check AND the non-NULL group count the completeness
         # probe needs at the end (spec is 1:1 with stats — no filters —
@@ -948,13 +920,6 @@ def grouped_median_mad(
         # generic machinery has), so they are excluded from the check
         # (``expected`` rode along with the width-probe job above).
         ok = gstats.count() == expected
-    finally:
-        # Release the cached stats on EVERY exit (success, the
-        # over-budget early return, a guard failure mid-action) so
-        # no CacheManager entry outlives the call (ADVICE r11
-        # pattern).
-        if stats_cached is not None:
-            stats_cached.unpersist()
     return gstats, ok
 
 

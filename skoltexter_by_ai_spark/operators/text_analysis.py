@@ -9,6 +9,7 @@ crossings; at 100 TB these are narrow map-only passes with no shuffle.
 from __future__ import annotations
 
 import time as _time
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -910,7 +911,7 @@ def learn_bpe_merges(
             ).alias("__sym"),
         )
     )
-    from skoltexter_by_ai_spark.operators.pinning import pin
+    from skoltexter_by_ai_spark.operators.pinning import pin, scoped_pin
 
     # Lazy: round 1's candidate collect materializes the corpus
     # aggregation and the pin in the same cascade.
@@ -945,12 +946,11 @@ def learn_bpe_merges(
         # so a second (tiny, filtered) job supplies exact per-symbol
         # maxima over the complete table.
         cap = max(10_000, 4 * want)
-        if want > 1:
-            pc = pc.persist()
-        # try/finally: if either collect below throws, the persisted
-        # pair table must not leak cached blocks for the session's
-        # lifetime (repeated failed calls would otherwise accumulate).
-        try:
+        # A batching round may read the pair table twice (the ranked
+        # collect, then the maxima job); the scoped pin is released on
+        # exit, also when a collect throws, so repeated failed calls
+        # cannot accumulate cached blocks.
+        with scoped_pin(pc) if want > 1 else nullcontext(pc) as pc:
             top = (
                 pc.orderBy(F.desc("__n"), F.col("__p.l"), F.col("__p.r"))
                 .limit(cap if want > 1 else 2)
@@ -1004,9 +1004,6 @@ def learn_bpe_merges(
                 batch = _bpe_select_batch(head, max_end, max_start, want)
             else:
                 batch = [c0]
-        finally:
-            if want > 1:
-                pc.unpersist()
         merges.extend(batch)
         batch_sizes.append(len(batch))
         rules = [(l, r, l + r) for l, r, _ in batch]

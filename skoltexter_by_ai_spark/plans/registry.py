@@ -80,29 +80,18 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Imported for their registration side effects.
-    from skoltexter_by_ai_spark.plans import core_queries  # noqa: F401
+    # Imported for their registration side effects. Plain imports: a
+    # module that fails to import must fail the run, not silently drop
+    # its queries from the bench and the oracle.
+    from skoltexter_by_ai_spark.plans import (  # noqa: F401  (registration order)
+        core_queries,
+        extension_queries,
+        olap_queries,
+        analytics_queries,
+        tpch_queries,
+        curation_queries,
+    )
 
-    try:
-        from skoltexter_by_ai_spark.plans import extension_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import olap_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import analytics_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import tpch_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import curation_queries  # noqa: F401
-    except ImportError:
-        pass
     _LOADED = True
 
 

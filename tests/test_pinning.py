@@ -207,3 +207,48 @@ def test_release_candidate_cache_via_explicit_handle(spark):
     assert dedup.release_candidate_cache(handle=handle) is True
     lvl = handle.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
+
+
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_scoped_pin_releases_its_entry_on_exit(spark, ckpt_dir, reliable):
+    """A build-scoped pin leaves nothing in the CacheManager, in either
+    mode: a leaked entry could be served to the next identical plan."""
+    from skoltexter_by_ai_spark.operators.pinning import scoped_pin
+
+    spark.catalog.clearCache()
+    df = spark.range(100).withColumn("v", F.col("id") * 3)
+    with scoped_pin(df, reliable=reliable) as pinned:
+        assert pinned.count() == 100
+        assert not _cache_manager_empty(spark)
+    assert _cache_manager_empty(spark)
+
+
+def test_scoped_pin_releases_its_entry_on_exception(spark):
+    from skoltexter_by_ai_spark.operators.pinning import scoped_pin
+
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="mid-build"):
+        with scoped_pin(spark.range(10)) as pinned:
+            pinned.count()
+            raise RuntimeError("mid-build")
+    assert _cache_manager_empty(spark)
+
+
+@pytest.mark.parametrize("fused", [True, False])
+def test_robust_zscore_guard_failure_leaves_no_cache_entry(spark, fused):
+    """An off-grid value fails the grid guard mid-action; the narrow
+    projection robust_zscore cached for its two rounds must still be
+    released."""
+    from skoltexter_by_ai_spark.operators.curation import robust_zscore
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [("a", 0.123456), ("a", 1.0), ("b", 2.0)], "g string, v double"
+    )
+    with pytest.raises(Exception, match="grid"):
+        robust_zscore(df, "v", "g", scale=100, fused=fused).collect()
+    assert _cache_manager_empty(spark)

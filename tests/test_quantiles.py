@@ -256,15 +256,15 @@ def test_off_grid_guard_message_names_remediation(spark):
 
 
 def test_global_quantiles_forward_persist_base(spark):
-    """ADVICE r3: the group_cols==[] branch must forward persist_base
-    (and guard_msg) through the synthetic-group recursion."""
+    """ADVICE r3: the group_cols==[] branch must forward its options
+    (guard_msg) through the synthetic-group recursion."""
     df = spark.createDataFrame([(float(i),) for i in range(101)], "v double")
-    out = exact_quantile_bounds(df, "v", [], [0.5], persist_base=True).collect()
+    out = exact_quantile_bounds(df, "v", [], [0.5]).collect()
     assert [r["__q0"] for r in out] == [50.0]
     # And the custom guard message surfaces on the global path too.
     bad = spark.createDataFrame([(0.123456,), (1.0,)], "v double")
     with pytest.raises(Exception) as exc:
-        exact_quantile_bounds(bad, "v", [], [0.5], persist_base=True).collect()
+        exact_quantile_bounds(bad, "v", [], [0.5]).collect()
     assert "approx_accuracy" in str(exc.value)
 
 
